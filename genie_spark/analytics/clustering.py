@@ -556,10 +556,10 @@ def semantic_dedup(
             )
 
     # the assignment is consumed by every per-table join —
-    # localCheckpoint, not persist: checkpoint blocks free when the
-    # DataFrame is garbage collected, so repeated calls in a session
-    # don't accumulate cache-manager entries only unpersist would
-    # release (the incremental_minhash_pairs hygiene rule)
+    # localCheckpoint, not persist: repeated calls in a session take no
+    # cache-manager entries only unpersist would release (the
+    # incremental_minhash_pairs rule); the blocks themselves stay until
+    # the JVM collects the plan, which GC does not promptly force
     a = (
         kmeans_assign(df, id_col, vec_col, k, iters)
         .select(F.col(id_col), "cluster_id")

@@ -36,12 +36,12 @@ def _release_on_gc(result: DataFrame, cached: DataFrame) -> DataFrame:
     function cannot unpersist before returning (the caller has not
     materialized yet), and leaving it to session end accumulates
     cache-manager entries in long-running sessions.  A weakref
-    finalizer ties the cache entry to the RESULT's lifetime — the same
-    freed-on-GC discipline ``localCheckpoint`` blocks get — so a
+    finalizer ties the cache entry to the RESULT's lifetime, so a
     caller that collects and drops the result releases the cache
-    without holding a handle to the internals.  Unpersist is
-    non-blocking and exceptions are swallowed (the session may already
-    be gone at interpreter shutdown)."""
+    without holding a handle to the internals.  (``localCheckpoint``
+    blocks get no such release: they stay registered until the JVM
+    collects their plan, which a Python GC does not force.)  Unpersist is non-blocking and exceptions are swallowed
+    (the session may already be gone at interpreter shutdown)."""
     import weakref
 
     jdf = cached._jdf
@@ -489,11 +489,13 @@ def incremental_minhash_pairs(
 
     Materialization: ``new_info`` and the candidate set are
     ``localCheckpoint(eager=True)``-ed, not persisted — each has two
-    consumers, and checkpoint blocks are freed when the DataFrames are
-    garbage collected, so per-batch loops (``near_dup_stream``) don't
-    accumulate cache-manager entries that only ``unpersist`` would
-    release.  (Same cluster-mode caveat as ``connected_components``:
-    with flaky executors use ``checkpoint()`` + a checkpoint dir.)
+    consumers, and checkpoint blocks take no cache-manager entry that
+    only ``unpersist`` would release.  They are not freed promptly
+    either: the blocks stay until the JVM collects the plan, which a
+    Python GC plus ``System.gc()`` does not guarantee (on PySpark 4.1.2
+    they were still registered 16 s after both), so per-batch loops (``near_dup_stream``) hold them for a while.
+    (Same cluster-mode caveat as ``connected_components``: with flaky
+    executors use ``checkpoint()`` + a checkpoint dir.)
     """
     new_info = minhash_docinfo(new_docs, id_col, text_col, k, n_perm).localCheckpoint(
         eager=True
@@ -827,9 +829,10 @@ def connected_components(
         if changed == 0:
             converged = True
             break
-    # edges' checkpoint blocks are freed when the DataFrame is GC'd
-    # (the localCheckpoint discipline used by every iterative operator
-    # here — pagerank, triangle_count, the quantile sketch)
+    # edges' checkpoint blocks are left to the ContextCleaner once the
+    # JVM collects the plan — not prompt, not guaranteed; the
+    # localCheckpoint discipline of every iterative operator here —
+    # pagerank, triangle_count, the quantile sketch
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "

@@ -705,10 +705,10 @@ def bpe_train(
     cap), and the merge loop runs driver-side with a lazy max-heap in
     the same pinned order and byte-identical replace semantics
     (pytest-pinned against the spark engine, including the
-    phantom-match corner).  ``tools/probe_bpe_trainer.py`` measures
-    the sublinearity at 1k merges; the apply side stays
+    phantom-match corner).  BASELINE.md ("Round-13 additions")
+    records the sublinearity at 1k merges; the apply side stays
     ``bpe_encode(engine="arrow")`` (plan cost flat in |merges|,
-    tools/probe_bpe_arrow.py).
+    BASELINE.md "Arrow BPE encoder probe").
     """
     from pyspark.sql import Window  # noqa: F401  (parity with siblings)
 
@@ -956,7 +956,7 @@ def bpe_encode(
       Spark (narrow ``tokens()`` projection feeds the UDF), so the
       two engines share one tokenizer.  Pinned equal on the oracle
       merge tables by pytest; plan/compile time measured flat at
-      1k/8k merges (``tools/probe_bpe_arrow.py``).
+      1k/8k merges (BASELINE.md "Arrow BPE encoder probe").
 
     The registered ``text_bpe_encode`` oracle runs the literal engine
     (auto at 5 merges) — unchanged.

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from genie_spark.formats import BY_NAME, determine_filetype
-from genie_spark.io.bronze import merge_into_bronze, rewrite_bronze
+from genie_spark.io.bronze import merge_into_bronze, read_bronze, rewrite_bronze
 
 
 def _bronze(warehouse: str, name: str) -> str:
@@ -57,29 +57,8 @@ def _read_bronze(spark: SparkSession, warehouse: str, name: str) -> DataFrame | 
     droppings; that is a not-ingested state, not a corrupt table).  A
     present table that fails to READ (corrupt footer, permission
     failure) raises: swallowing it would let dashboard/release compute
-    silently with missing inputs."""
-    from genie_spark.io.bronze import recover_bronze
-
-    path = _bronze(warehouse, name)
-    # roll FORWARD any swap a crashed merge left half-done — readers
-    # must never see a half-old/half-new table.  clean_leftovers=False:
-    # a manifest-less staging dir may be a LIVE writer's in-progress
-    # output; only writers may delete it (io/bronze.py contract)
-    recover_bronze(path, clean_leftovers=False)
-    if not os.path.isdir(path):
-        return None
-    has_part = any(
-        f.endswith(".parquet")
-        for root, dirs, files in os.walk(path)
-        if "_temporary" not in root
-        for f in files
-    )
-    if not has_part:
-        return None
-    # mergeSchema: a schema-evolving MERGE only rewrites the batch's
-    # partitions — the union read surfaces evolved columns (as nulls)
-    # on partitions still carrying the narrower on-disk schema
-    return spark.read.option("mergeSchema", "true").parquet(path)
+    silently with missing inputs (``io.bronze.read_bronze``)."""
+    return read_bronze(spark, _bronze(warehouse, name))
 
 
 def _norm_assay_id(c: F.Column) -> F.Column:
@@ -406,9 +385,7 @@ def cmd_release(spark: SparkSession, args: argparse.Namespace) -> int:
     # assay information for the released assays (reference
     # store_assay_info_files, genie/database_to_staging.py:1158-1196)
     if assay_info is not None and "SEQ_ASSAY_ID" in assay_info.columns:
-        from genie_spark.io.writers import write_tsv as _write_tsv
-
-        _write_tsv(
+        write_tsv(
             assay_info.where(F.col("SEQ_ASSAY_ID").isin(assay_ids)),
             os.path.join(args.output, "assay_information.txt"),
         )
@@ -609,17 +586,13 @@ def _append_release_snapshot(
     # monotonic sequence number: release version strings are NOT safely
     # orderable ('v10' < 'v9' lexicographically), so the dashboard's
     # release-over-release lag orders by this stamp instead
-    path = _bronze(warehouse, "release_counts")
     seq = 0
-    # Explicit path check instead of a bare try/except: a genuine read
-    # failure (corrupt footer, permissions) must propagate, not silently
-    # reset the sequence to 0 (which would stamp a duplicate ReleaseSeq
-    # and corrupt the dashboard's lag ordering).
-    if os.path.isdir(path):
-        # mergeSchema: legacy snapshots predate the ReleaseSeq column; a
-        # single-footer read could nondeterministically drop the column
-        # (or the legacy rows) from a mixed-schema log
-        existing = spark.read.option("mergeSchema", "true").parquet(path)
+    # a genuine read failure (corrupt footer, permissions) propagates
+    # rather than resetting the sequence to 0, which would stamp a
+    # duplicate ReleaseSeq and corrupt the dashboard's lag ordering; the
+    # mergeSchema read surfaces ReleaseSeq (null) on legacy snapshots
+    existing = _read_bronze(spark, warehouse, "release_counts")
+    if existing is not None:
         if "ReleaseSeq" in existing.columns:
             mx = existing.agg(F.max("ReleaseSeq")).first()[0]
             # all-legacy log (column merged in but every row null):
@@ -635,7 +608,7 @@ def _append_release_snapshot(
         .withColumn("ReleaseSeq", F.lit(seq + 1).cast("long"))
     )
     # append-only snapshot log; one release's rows are center-count sized
-    snap.write.mode("append").parquet(path)
+    snap.write.mode("append").parquet(_bronze(warehouse, "release_counts"))
 
     # per-release sample membership log feeding the samples-in-release
     # matrix (reference update_samples_in_release_table,
@@ -888,9 +861,8 @@ def cmd_dashboard(spark: SparkSession, args: argparse.Namespace) -> int:
     # update_samples_in_release_table, dashboard_table_updater.py:53-110):
     # 1 = sample in that release, 0 = not; release columns ordered by
     # their monotonic ingest sequence
-    rs_path = _bronze(args.warehouse, "release_samples")
-    if os.path.isdir(rs_path):
-        rs = spark.read.option("mergeSchema", "true").parquet(rs_path)
+    rs = _read_bronze(spark, args.warehouse, "release_samples")
+    if rs is not None:
         releases = list(
             dict.fromkeys(
                 r["Release"]
@@ -907,12 +879,7 @@ def cmd_dashboard(spark: SparkSession, args: argparse.Namespace) -> int:
             .na.fill(0)
         )
 
-    rc_path = _bronze(args.warehouse, "release_counts")
-    release_counts = (
-        spark.read.option("mergeSchema", "true").parquet(rc_path)
-        if os.path.isdir(rc_path)
-        else None
-    )
+    release_counts = _read_bronze(spark, args.warehouse, "release_counts")
     if release_counts is not None:
         from pyspark.sql import Window
 

@@ -31,12 +31,12 @@ via tmp-file + ``os.rename``) records the staging dir and the exact
 per-partition file listing BEFORE the first move; every move is a
 same-filesystem ``os.rename`` (atomic per entry); the manifest is
 removed only after the last move and cleanup.  ``recover_bronze``
-(called by every merge/compact/rewrite entry point and by the CLI
-read path) rolls an interrupted swap FORWARD from the manifest —
-staging holds complete replacement partitions, so resuming the move
-loop always converges to the fully-new state — and rolls BACK
-(deletes) staging dirs that have no manifest, which are pre-commit
-writes the crash abandoned.
+(called by every merge/compact/rewrite entry point and by
+``read_bronze``, the one reader of warehouse tables) rolls an
+interrupted swap FORWARD from the manifest — staging holds complete
+replacement partitions, so resuming the move loop always converges
+to the fully-new state — and rolls BACK (deletes) staging dirs that
+have no manifest, which are pre-commit writes the crash abandoned.
 """
 
 from __future__ import annotations
@@ -65,9 +65,9 @@ LOCK_SUFFIX = ".swap.lock"
 def _swap_lock(target_path: str):
     """Exclusive advisory lock serializing swap application per table.
 
-    The manifest is live while a writer applies its own swap, and the
-    CLI read path (plus any second reader) also rolls manifested swaps
-    forward — without exclusion, two appliers can interleave
+    The manifest is live while a writer applies its own swap, and
+    ``read_bronze`` (in any number of readers) also rolls manifested
+    swaps forward — without exclusion, two appliers can interleave
     ``isdir(src)`` / ``rmtree(dst)`` / ``rename(src, dst)`` so that one
     deletes the partition the other just installed and then fails
     ENOENT, losing the partition from BOTH staging and target.  Every
@@ -326,7 +326,7 @@ def recover_bronze(target_path: str, clean_leftovers: bool = True) -> dict:
 
     Returns {"action": "rolled_forward" | "rolled_back" | "clean"}.
     Called automatically by merge/compact/rewrite (leftover-cleaning)
-    and the CLI read path (forward-only), and safe to call any time.
+    and ``read_bronze`` (forward-only), and safe to call any time.
     """
     manifest_path = target_path + MANIFEST_SUFFIX
     if os.path.exists(manifest_path):
@@ -472,6 +472,17 @@ class DirectorySwapCommit(TableCommit):
 
 
 DEFAULT_COMMIT = DirectorySwapCommit()
+
+
+def read_bronze(spark, target_path: str) -> DataFrame | None:
+    """The reader entry point for any warehouse table: roll FORWARD a
+    swap a crashed writer left half-done (readers must never see a
+    half-old/half-new table), then ``TableCommit.read`` — None iff the
+    table is absent, raise iff it is present but unreadable.
+    ``clean_leftovers=False``: a manifest-less staging dir may be a
+    live writer's in-progress output, which only writers may delete."""
+    DEFAULT_COMMIT.recover(target_path, clean_leftovers=False)
+    return DEFAULT_COMMIT.read(spark, target_path)
 
 
 def _swap_partitions(
@@ -639,11 +650,12 @@ def compact_bronze(
 def rewrite_bronze(
     df: DataFrame,
     target_path: str,
-    partition_col: str = PARTITION_COL,
+    partition_col: str | None = PARTITION_COL,
     commit: TableCommit = DEFAULT_COMMIT,
 ) -> None:
     """Full two-phase rewrite (used by retraction, which may touch any
-    partition); keeps the partitioned layout when the column is present."""
+    partition, and by the flat status tables, ``partition_col=None``);
+    keeps the partitioned layout when the column is present."""
     commit.recover(target_path)
     staging = commit.staging_path(target_path)
     writer = df.write.mode("overwrite")

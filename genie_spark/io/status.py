@@ -11,18 +11,21 @@ rejected outright.
 Here both live as small parquet tables in the warehouse
 (``validation_status`` / ``error_tracker``), one row per (center,
 name).  They are dim-sized — one row per uploaded file — so the
-read-modify-write update is cheap and the md5 is computed driver-side
-over the upload file, exactly where the reference reads the Synapse
-entity md5.
+read-modify-write update is cheap; it reads and replaces the table
+through ``io.bronze`` (``read_bronze``, then the journaled
+``rewrite_bronze`` swap), which stands in for the Synapse table's
+transactional upsert.  The md5 is computed driver-side over the upload
+file, exactly where the reference reads the Synapse entity md5.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from genie_spark.io.bronze import read_bronze, rewrite_bronze
 
 STATUS_TABLE = "validation_status"
 ERROR_TABLE = "error_tracker"
@@ -50,10 +53,10 @@ def duplicate_basenames(paths: list[str]) -> list[str]:
 
 
 def _read(spark: SparkSession, warehouse: str, table: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(os.path.join(warehouse, table))
-    except Exception:
-        return None
+    """None iff the table is absent; a present-but-unreadable table
+    raises — a swallowed read would let ``_upsert_small`` replace every
+    center's rows with the one new row."""
+    return read_bronze(spark, os.path.join(warehouse, table))
 
 
 def prior_status(
@@ -148,16 +151,12 @@ def _upsert_small(
     center: str,
     name: str,
 ) -> None:
-    target = os.path.join(warehouse, table)
     existing = _read(spark, warehouse, table)
     if existing is not None:
         keep = existing.where(
             ~((existing.center == center) & (existing.name == name))
         )
-        out = keep.unionByName(new)
-    else:
-        out = new
-    staging = target + ".staging"
-    out.write.mode("overwrite").parquet(staging)
-    shutil.rmtree(target, ignore_errors=True)
-    shutil.move(staging, target)
+        new = keep.unionByName(new)
+    # journaled whole-table swap (io/bronze.py); partition_col=None
+    # keeps the flat layout
+    rewrite_bronze(new, os.path.join(warehouse, table), partition_col=None)

@@ -1,10 +1,9 @@
 """Release-artifact writers (SURVEY.md §2.1 S13-S18).
 
-The reference writes single TSV/text files per artifact.  Here each
-writer has two modes: ``parts`` (df.write.csv — the 100 TB path, many
-files) and ``single`` (assemble one file on the driver from the part
-files — what cBioPortal ingestion expects; release artifacts are
-GB-scale, bounded).
+The reference writes single TSV/text files per artifact, which is what
+cBioPortal ingestion expects.  Here each writer runs ``df.write.csv``
+to part files, then assembles the one file on the driver (release
+artifacts are GB-scale, bounded).
 """
 
 from __future__ import annotations
@@ -40,7 +39,6 @@ def strip_float_formatting(df: DataFrame) -> DataFrame:
 def write_tsv(
     df: DataFrame,
     path: str,
-    single: bool = True,
     na_rep: str = "",
     header_lines: Sequence[str] = (),
 ) -> None:
@@ -58,22 +56,19 @@ def write_tsv(
         .option("nullValue", na_rep)
         .csv(tmp)
     )
-    if single:
-        parts = sorted(glob.glob(os.path.join(tmp, "part-*")))
-        with open(path, "w") as outfh:
-            for line in header_lines:
-                outfh.write(line + "\n")
-            wrote_header = False
-            for p in parts:
-                with open(p) as fh:
-                    header = fh.readline()
-                    if not wrote_header:
-                        outfh.write(header)
-                        wrote_header = True
-                    shutil.copyfileobj(fh, outfh)
-        shutil.rmtree(tmp)
-    else:
-        os.rename(tmp, path)
+    parts = sorted(glob.glob(os.path.join(tmp, "part-*")))
+    with open(path, "w") as outfh:
+        for line in header_lines:
+            outfh.write(line + "\n")
+        wrote_header = False
+        for p in parts:
+            with open(p) as fh:
+                header = fh.readline()
+                if not wrote_header:
+                    outfh.write(header)
+                    wrote_header = True
+                shutil.copyfileobj(fh, outfh)
+    shutil.rmtree(tmp)
 
 
 def cbio_clinical_headers(
@@ -110,8 +105,7 @@ def write_cbio_clinical(df: DataFrame, path: str, **header_kwargs) -> None:
     rest = [c for c in df.columns if c not in id_cols]
     df = df.select(*id_cols, *rest)
     write_tsv(
-        df, path, single=True,
-        header_lines=cbio_clinical_headers(df.columns, **header_kwargs),
+        df, path, header_lines=cbio_clinical_headers(df.columns, **header_kwargs)
     )
 
 
@@ -193,13 +187,11 @@ def write_cbio_clinical_split(
         write_tsv(
             one_per("PATIENT_ID", pat_order).select(*pat_order),
             patient_path,
-            single=True,
             header_lines=cbio_clinical_headers(pat_order, **header_kwargs),
         )
     write_tsv(
         one_per("SAMPLE_ID", smp_order).select(*smp_order),
         sample_path,
-        single=True,
         header_lines=cbio_clinical_headers(smp_order, **header_kwargs),
     )
 
@@ -221,7 +213,7 @@ def write_cna_wide(
         .agg(F.first("value"))
         .orderBy("Hugo_Symbol")
     )
-    write_tsv(pivoted, path, single=True, na_rep=na_rep)
+    write_tsv(pivoted, path, na_rep=na_rep)
 
 
 def case_list_texts(

@@ -161,7 +161,38 @@ SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    bases = set()
     for item in items:
         base = getattr(item, "originalname", None) or item.name
+        bases.add(base)
         if base in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    # SLOW_TESTS matches bare names, so a renamed or deleted test leaves
+    # a stale entry behind silently.  Only a collection that holds every
+    # test module here can tell stale from "not selected this run".
+    here = os.path.dirname(os.path.abspath(__file__))
+    modules = {
+        os.path.join(here, f)
+        for f in os.listdir(here)
+        if f.startswith("test_") and f.endswith(".py")
+    }
+    if modules <= {str(item.path) for item in items}:
+        stale = sorted(SLOW_TESTS - bases)
+        if stale:
+            raise pytest.UsageError(
+                "tests/conftest.py SLOW_TESTS names no collected test: "
+                + ", ".join(stale)
+            )
+
+
+def pytest_terminal_summary(terminalreporter):
+    slow = [
+        item
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slow")
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f"{len(slow)} slow tests deselected "
+            '(run them with -m slow, or everything with -m "")'
+        )

@@ -1765,6 +1765,85 @@ def test_validation_status_workflow(spark, tmp_path, capsys):
     assert len(errs) == 1 and "must at least have" in errs[0]["errors"]
 
 
+def test_corrupt_status_table_fails_ingest_loudly(spark, tmp_path):
+    """A present-but-unreadable validation_status table raises out of
+    cmd_ingest: read as "no table", the status upsert would replace
+    every center's rows with the one new row."""
+    from genie_spark.io.status import STATUS_SCHEMA
+
+    wh = str(tmp_path / "warehouse")
+    status = os.path.join(wh, "validation_status")
+    spark.createDataFrame(
+        [
+            (CENTER, "a.txt", "m1", "VALIDATED", "a.txt"),
+            ("OTHER", "b.txt", "m2", "VALIDATED", "b.txt"),
+        ],
+        STATUS_SCHEMA,
+    ).coalesce(1).write.parquet(status)
+    parts = [f for f in os.listdir(status) if f.startswith("part-")]
+    for f in parts:
+        with open(os.path.join(status, f), "wb") as fh:
+            fh.write(b"this is not a parquet footer")
+
+    with pytest.raises(Exception, match="(?i)parquet|footer"):
+        cmd_ingest(
+            spark,
+            _ns(paths=_write_clinical_pair(tmp_path), center=CENTER,
+                warehouse=wh, filetype=None, force=True),
+        )
+    # nothing was rewritten over the corrupt table
+    assert sorted(f for f in os.listdir(status) if f.startswith("part-")) == (
+        sorted(parts)
+    )
+
+
+def test_interrupted_status_swap_rolls_forward(spark, tmp_path, monkeypatch):
+    """A status upsert that dies after publishing its swap manifest is
+    rolled FORWARD by the next prior_status: the reader sees the new
+    row and the old rows, never a half-swapped or missing table."""
+    from genie_spark.io import bronze
+    from genie_spark.io.status import prior_status, record_status
+
+    wh = str(tmp_path / "warehouse")
+    record_status(spark, wh, CENTER, "a.txt", "m1", "VALIDATED", path="a.txt")
+
+    def crash(manifest):
+        raise RuntimeError("killed after the manifest was written")
+
+    monkeypatch.setattr(bronze, "_apply_whole_swap", crash)
+    with pytest.raises(RuntimeError, match="killed"):
+        record_status(
+            spark, wh, CENTER, "b.txt", "m2", "INVALID", path="b.txt",
+            errors="bad",
+        )
+    manifest = os.path.join(wh, "validation_status") + bronze.MANIFEST_SUFFIX
+    assert os.path.exists(manifest)
+    monkeypatch.undo()
+
+    assert prior_status(spark, wh, CENTER, "b.txt", "m2") == "INVALID"
+    assert not os.path.exists(manifest)
+    assert prior_status(spark, wh, CENTER, "a.txt", "m1") == "VALIDATED"
+
+
+def test_dashboard_reads_uncommitted_release_logs_as_absent(spark, tmp_path):
+    """release_counts / release_samples directories holding only an
+    aborted append's _temporary are "no release yet", not an
+    unreadable table: the dashboard skips the release-history
+    outputs instead of failing to infer a schema."""
+    wh = str(tmp_path / "warehouse")
+    spark.createDataFrame(
+        [("GENIE-SAGE-1-1", "SAGE")], "SAMPLE_ID string, CENTER string"
+    ).write.parquet(os.path.join(wh, "clinical"))
+    for name in ("release_counts", "release_samples"):
+        os.makedirs(os.path.join(wh, name, "_temporary", "0"))
+
+    dash = str(tmp_path / "dash")
+    assert cmd_dashboard(spark, _ns(warehouse=wh, output=dash)) == 0
+    written = set(os.listdir(dash))
+    assert {"sample_counts", "distinct_samples"} <= written
+    assert not {"samples_in_release", "sample_diff"} & written
+
+
 def test_workflow_format_and_mutations_in_cis_rules(spark, tmp_path):
     wf = tmp_path / f"{CENTER}-workflow.md"
     wf.write_text("# workflow\n")
