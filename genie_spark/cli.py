@@ -298,156 +298,177 @@ def cmd_release(spark: SparkSession, args: argparse.Namespace) -> int:
         consortium_cutoff_days=getattr(args, "seq_date_cutoff", 184),
         pad=args.pad,
     )
-    os.makedirs(args.output, exist_ok=True)
-    write_cbio_clinical(
-        arts.clinical, os.path.join(args.output, "data_clinical.txt")
-    )
-    # split clinical pair the reference stores alongside the merged
-    # file (database_to_staging.py:1361-1368 via addClinicalHeaders)
-    from genie_spark.io.writers import write_cbio_clinical_split
-
-    if {"SAMPLE_ID", "PATIENT_ID"} <= set(arts.clinical.columns):
-        write_cbio_clinical_split(
-            arts.clinical,
-            os.path.join(args.output, "data_clinical_sample.txt"),
-            os.path.join(args.output, "data_clinical_patient.txt"),
+    # every artifact below feeds several writers, the case lists, the
+    # count snapshot and the counts: compute each one once, and release
+    # the cached blocks when the command returns or raises
+    cached = [
+        df
+        for df in (
+            arts.clinical, arts.maf, arts.cna_long, arts.gene_matrix,
+            arts.sv, arts.seg,
         )
-    write_tsv(arts.maf, os.path.join(args.output, "data_mutations_extended.txt"))
-    if arts.sv is not None:
-        write_tsv(arts.sv, os.path.join(args.output, "data_sv.txt"))
-    if arts.seg is not None:
-        write_tsv(arts.seg, os.path.join(args.output, "genie_data_cna_hg19.seg"))
-    if arts.cna_long is not None:
-        write_cna_wide(arts.cna_long, os.path.join(args.output, "data_CNA.txt"))
-    if arts.gene_matrix is not None:
-        write_tsv(arts.gene_matrix, os.path.join(args.output, "data_gene_matrix.txt"))
+        if df is not None
+    ]
+    for df in cached:
+        df.persist()
+    try:
+        os.makedirs(args.output, exist_ok=True)
+        write_cbio_clinical(
+            arts.clinical, os.path.join(args.output, "data_clinical.txt")
+        )
+        # split clinical pair the reference stores alongside the merged
+        # file (database_to_staging.py:1361-1368 via addClinicalHeaders)
+        from genie_spark.io.writers import write_cbio_clinical_split
 
-    # released assay ids drive the bed file, gene panels, and case lists
-    # (dim-sized collect: one row per SEQ_ASSAY_ID)
-    assay_ids = sorted(
-        r[0]
-        for r in arts.clinical.select("SEQ_ASSAY_ID").distinct().collect()
-        if r[0] is not None
-    )
+        if {"SAMPLE_ID", "PATIENT_ID"} <= set(arts.clinical.columns):
+            write_cbio_clinical_split(
+                arts.clinical,
+                os.path.join(args.output, "data_clinical_sample.txt"),
+                os.path.join(args.output, "data_clinical_patient.txt"),
+            )
+        write_tsv(arts.maf, os.path.join(args.output, "data_mutations_extended.txt"))
+        if arts.sv is not None:
+            write_tsv(arts.sv, os.path.join(args.output, "data_sv.txt"))
+        if arts.seg is not None:
+            write_tsv(arts.seg, os.path.join(args.output, "genie_data_cna_hg19.seg"))
+        if arts.cna_long is not None:
+            write_cna_wide(arts.cna_long, os.path.join(args.output, "data_CNA.txt"))
+        if arts.gene_matrix is not None:
+            write_tsv(arts.gene_matrix, os.path.join(args.output, "data_gene_matrix.txt"))
 
-    # combined bed release file, filtered to released assays (reference
-    # store_bed_files genie/database_to_staging.py:1657-1709)
-    if arts.bed is not None:
-        released_bed = arts.bed.where(F.col("SEQ_ASSAY_ID").isin(assay_ids))
-        write_tsv(
-            released_bed, os.path.join(args.output, "genomic_information.txt")
+        # released assay ids drive the bed file, gene panels, and case lists
+        # (dim-sized collect: one row per SEQ_ASSAY_ID)
+        assay_ids = sorted(
+            r[0]
+            for r in arts.clinical.select("SEQ_ASSAY_ID").distinct().collect()
+            if r[0] is not None
         )
 
-    # per-panel gene panel files, WES panels excluded (reference
-    # store_gene_panel_files genie/database_to_staging.py:809-859)
-    from genie_spark.io.writers import case_list_alteration_texts, case_list_texts, gene_panel_text
-    from genie_spark.release.pipeline import wes_panels
+        # combined bed release file, filtered to released assays (reference
+        # store_bed_files genie/database_to_staging.py:1657-1709)
+        if arts.bed is not None:
+            released_bed = arts.bed.where(F.col("SEQ_ASSAY_ID").isin(assay_ids))
+            write_tsv(
+                released_bed, os.path.join(args.output, "genomic_information.txt")
+            )
 
-    study_id = getattr(args, "study_id", "genie_private")
-    assay_info = _read_bronze(spark, args.warehouse, "assayinfo")
-    wes_ids = (
-        {r[0] for r in wes_panels(assay_info).collect()}
-        if assay_info is not None and "library_strategy" in assay_info.columns
-        else set()
-    )
-    if arts.bed is not None:
-        for assay_id in assay_ids:
-            if assay_id in wes_ids:
-                continue
-            text = gene_panel_text(arts.bed, assay_id)
-            with open(
-                os.path.join(args.output, f"data_gene_panel_{assay_id}.txt"), "w"
-            ) as f:
+        # per-panel gene panel files, WES panels excluded (reference
+        # store_gene_panel_files genie/database_to_staging.py:809-859)
+        from genie_spark.io.writers import (
+            case_list_alteration_texts,
+            case_list_texts,
+            gene_panel_text,
+        )
+        from genie_spark.release.pipeline import wes_panels
+
+        study_id = getattr(args, "study_id", "genie_private")
+        assay_info = _read_bronze(spark, args.warehouse, "assayinfo")
+        wes_ids = (
+            {r[0] for r in wes_panels(assay_info).collect()}
+            if assay_info is not None and "library_strategy" in assay_info.columns
+            else set()
+        )
+        if arts.bed is not None:
+            for assay_id in assay_ids:
+                if assay_id in wes_ids:
+                    continue
+                text = gene_panel_text(arts.bed, assay_id)
+                with open(
+                    os.path.join(args.output, f"data_gene_panel_{assay_id}.txt"), "w"
+                ) as f:
+                    f.write(text)
+
+        # case lists on disk: per CANCER_TYPE + all + sequenced + cna/sv
+        # (reference genie/create_case_lists.py:44-199)
+        case_dir = os.path.join(args.output, "case_lists")
+        os.makedirs(case_dir, exist_ok=True)
+        texts = {}
+        if "CANCER_TYPE" in arts.clinical.columns:
+            texts.update(case_list_texts(arts.clinical, study_id=study_id))
+        else:
+            texts.update(
+                case_list_texts(
+                    arts.clinical.withColumn("CANCER_TYPE", F.lit(None).cast("string")),
+                    study_id=study_id,
+                )
+            )
+        if assay_info is not None:
+            texts.update(
+                case_list_alteration_texts(arts.clinical, assay_info, study_id)
+            )
+        for name, text in texts.items():
+            with open(os.path.join(case_dir, name), "w") as f:
                 f.write(text)
 
-    # case lists on disk: per CANCER_TYPE + all + sequenced + cna/sv
-    # (reference genie/create_case_lists.py:44-199)
-    case_dir = os.path.join(args.output, "case_lists")
-    os.makedirs(case_dir, exist_ok=True)
-    texts = {}
-    if "CANCER_TYPE" in arts.clinical.columns:
-        texts.update(case_list_texts(arts.clinical, study_id=study_id))
-    else:
-        texts.update(
-            case_list_texts(
-                arts.clinical.withColumn("CANCER_TYPE", F.lit(None).cast("string")),
-                study_id=study_id,
+        # assay information for the released assays (reference
+        # store_assay_info_files, genie/database_to_staging.py:1158-1196)
+        if assay_info is not None and "SEQ_ASSAY_ID" in assay_info.columns:
+            write_tsv(
+                assay_info.where(F.col("SEQ_ASSAY_ID").isin(assay_ids)),
+                os.path.join(args.output, "assay_information.txt"),
+            )
+
+        # cBioPortal meta files — generated, where the reference revises
+        # pre-existing ones (revise_metadata_files,
+        # genie/database_to_staging.py:1960-2009)
+        from genie_spark.io.writers import cbio_meta_texts
+
+        present = {
+            n for n in os.listdir(args.output)
+            if os.path.isfile(os.path.join(args.output, n))
+        }
+        for name, text in cbio_meta_texts(study_id, args.version, present).items():
+            with open(os.path.join(args.output, name), "w") as f:
+                f.write(text)
+
+        # per-center count snapshot for the dashboard's release-over-release
+        # diff (reference cumulativeSampleCount feeding
+        # update_sample_difference_table, dashboard_table_updater.py:398-483)
+        _append_release_snapshot(spark, args.warehouse, args.version, arts)
+
+        counts = {
+            "clinical": arts.clinical.count(),
+            "maf": arts.maf.count(),
+        }
+        # post-write QC over the assembled directory (the reference runs the
+        # cBioPortal validator here, bin/database_to_staging.py:310-332;
+        # like the reference's `; exit 0` it reports but does not abort)
+        qc_errors = 0
+        if not getattr(args, "skip_qc", False):
+            from genie_spark.release.qc import validate_release
+
+            report = validate_release(spark, args.output)
+            qc_errors = len(report.errors)
+            for m in report.errors:
+                print(f"QC {m.rule_id}: {m.message}", file=sys.stderr)
+        guide_path = getattr(args, "data_guide", None)
+        if guide_path:
+            provenance = {
+                "released clinical samples": counts["clinical"],
+                "released mutation rows": counts["maf"],
+            }
+            for label, df in (
+                ("samples removed by release filters", arts.removed_samples),
+                ("samples flagged (mutations-in-cis)", arts.flagged_samples),
+                ("variants removed (off-bed)", arts.removed_variants),
+            ):
+                if df is not None:
+                    provenance[label] = df.count()
+            text = data_guide_html(
+                spark, args.output, study_id, args.version, provenance
+            )
+            with open(guide_path, "w") as f:
+                f.write(text)
+            print(f"data guide → {guide_path}")
+        print(
+            json.dumps(
+                {"release": args.version, "rows": counts, "qc_errors": qc_errors}
             )
         )
-    if assay_info is not None:
-        texts.update(
-            case_list_alteration_texts(arts.clinical, assay_info, study_id)
-        )
-    for name, text in texts.items():
-        with open(os.path.join(case_dir, name), "w") as f:
-            f.write(text)
-
-    # assay information for the released assays (reference
-    # store_assay_info_files, genie/database_to_staging.py:1158-1196)
-    if assay_info is not None and "SEQ_ASSAY_ID" in assay_info.columns:
-        write_tsv(
-            assay_info.where(F.col("SEQ_ASSAY_ID").isin(assay_ids)),
-            os.path.join(args.output, "assay_information.txt"),
-        )
-
-    # cBioPortal meta files — generated, where the reference revises
-    # pre-existing ones (revise_metadata_files,
-    # genie/database_to_staging.py:1960-2009)
-    from genie_spark.io.writers import cbio_meta_texts
-
-    present = {
-        n for n in os.listdir(args.output)
-        if os.path.isfile(os.path.join(args.output, n))
-    }
-    for name, text in cbio_meta_texts(study_id, args.version, present).items():
-        with open(os.path.join(args.output, name), "w") as f:
-            f.write(text)
-
-    # per-center count snapshot for the dashboard's release-over-release
-    # diff (reference cumulativeSampleCount feeding
-    # update_sample_difference_table, dashboard_table_updater.py:398-483)
-    _append_release_snapshot(spark, args.warehouse, args.version, arts)
-
-    counts = {
-        "clinical": arts.clinical.count(),
-        "maf": arts.maf.count(),
-    }
-    # post-write QC over the assembled directory (the reference runs the
-    # cBioPortal validator here, bin/database_to_staging.py:310-332;
-    # like the reference's `; exit 0` it reports but does not abort)
-    qc_errors = 0
-    if not getattr(args, "skip_qc", False):
-        from genie_spark.release.qc import validate_release
-
-        report = validate_release(spark, args.output)
-        qc_errors = len(report.errors)
-        for m in report.errors:
-            print(f"QC {m.rule_id}: {m.message}", file=sys.stderr)
-    guide_path = getattr(args, "data_guide", None)
-    if guide_path:
-        provenance = {
-            "released clinical samples": counts["clinical"],
-            "released mutation rows": counts["maf"],
-        }
-        for label, df in (
-            ("samples removed by release filters", arts.removed_samples),
-            ("samples flagged (mutations-in-cis)", arts.flagged_samples),
-            ("variants removed (off-bed)", arts.removed_variants),
-        ):
-            if df is not None:
-                provenance[label] = df.count()
-        text = data_guide_html(
-            spark, args.output, study_id, args.version, provenance
-        )
-        with open(guide_path, "w") as f:
-            f.write(text)
-        print(f"data guide → {guide_path}")
-    print(
-        json.dumps(
-            {"release": args.version, "rows": counts, "qc_errors": qc_errors}
-        )
-    )
-    return 0
+        return 0
+    finally:
+        for df in cached:
+            df.unpersist()
 
 
 def cmd_nightly(spark: SparkSession, args: argparse.Namespace) -> int:

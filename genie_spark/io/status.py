@@ -10,12 +10,17 @@ rejected outright.
 
 Here both live as small parquet tables in the warehouse
 (``validation_status`` / ``error_tracker``), one row per (center,
-name).  They are dim-sized — one row per uploaded file — so the
-read-modify-write update is cheap; it reads and replaces the table
-through ``io.bronze`` (``read_bronze``, then the journaled
-``rewrite_bronze`` swap), which stands in for the Synapse table's
-transactional upsert.  The md5 is computed driver-side over the upload
-file, exactly where the reference reads the Synapse entity md5.
+name).  An update reads the table through ``io.bronze``
+(``read_bronze``), drops the (center, name) row and replaces the whole
+table with the journaled ``rewrite_bronze`` swap, which stands in for
+the Synapse table's transactional upsert.  That costs a few Spark jobs
+per table per upload, whatever the table size, so an update that
+changes nothing is skipped: a valid upload with no stored error row
+leaves the error tracker alone, and a warehouse that never saw an
+invalid upload has no tracker at all.  The new rows enter as one Arrow
+batch (``session.local_rows_df``), so no Python worker runs in the
+swap.  The md5 is computed driver-side over the upload file, exactly
+where the reference reads the Synapse entity md5.
 """
 
 from __future__ import annotations
@@ -26,6 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from genie_spark.io.bronze import read_bronze, rewrite_bronze
+from genie_spark.session import local_rows_df
 
 STATUS_TABLE = "validation_status"
 ERROR_TABLE = "error_tracker"
@@ -90,14 +96,14 @@ def record_status(
 ) -> None:
     """Upsert the (center, name) status row and mirror the error text
     into the error tracker (cleared when the file turns valid)."""
-    new = spark.createDataFrame(
-        [(center, name, md5, status, path)], STATUS_SCHEMA
+    _upsert_small(
+        spark, warehouse, STATUS_TABLE, STATUS_SCHEMA,
+        [(center, name, md5, status, path)], center, name,
     )
-    _upsert_small(spark, warehouse, STATUS_TABLE, new, center, name)
-    err = spark.createDataFrame(
-        [(center, name, errors)] if errors else [], ERROR_SCHEMA
+    _upsert_small(
+        spark, warehouse, ERROR_TABLE, ERROR_SCHEMA,
+        [(center, name, errors)] if errors else [], center, name,
     )
-    _upsert_small(spark, warehouse, ERROR_TABLE, err, center, name)
 
 
 def invalid_reason_texts(
@@ -147,16 +153,26 @@ def _upsert_small(
     spark: SparkSession,
     warehouse: str,
     table: str,
-    new: DataFrame,
+    schema: str,
+    rows: list[tuple],
     center: str,
     name: str,
 ) -> None:
+    """Replace the table's (center, name) rows with ``rows``.  With no
+    ``rows`` and no stored (center, name) row nothing would change, so
+    the table is left as it is (or absent)."""
     existing = _read(spark, warehouse, table)
-    if existing is not None:
-        keep = existing.where(
-            ~((existing.center == center) & (existing.name == name))
-        )
-        new = keep.unionByName(new)
+    if existing is None:
+        if not rows:
+            return
+        out = local_rows_df(spark, rows, schema)
+    else:
+        key = (existing.center == center) & (existing.name == name)
+        if not rows and not existing.where(key).take(1):
+            return
+        out = existing.where(~key)
+        if rows:
+            out = out.unionByName(local_rows_df(spark, rows, schema))
     # journaled whole-table swap (io/bronze.py); partition_col=None
     # keeps the flat layout
-    rewrite_bronze(new, os.path.join(warehouse, table), partition_col=None)
+    rewrite_bronze(out, os.path.join(warehouse, table), partition_col=None)

@@ -1,9 +1,14 @@
 """Release-artifact writers (SURVEY.md §2.1 S13-S18).
 
 The reference writes single TSV/text files per artifact, which is what
-cBioPortal ingestion expects.  Here each writer runs ``df.write.csv``
-to part files, then assembles the one file on the driver (release
-artifacts are GB-scale, bounded).
+cBioPortal ingestion expects.  Here each TSV writer runs one
+``df.write.csv`` job into a temporary part-file directory, then
+concatenates the part files into the one file on the driver (a byte
+copy; the rows are never collected).  The case-list and gene-panel
+texts collect their KB-scale id lists instead.  Each call plans its
+input afresh, so a caller that hands several writers the same release
+artifact persists it first (``cli.cmd_release`` does), or the release
+lineage is recomputed for every file.
 """
 
 from __future__ import annotations

@@ -10,8 +10,14 @@ dimension table (nation/region-sized, oncotree-sized) broadcasts.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
+
+
+# local_rows_df warns once per process when it falls back to the
+# pickle path
+_fallback_warned = False
 
 
 def _external_master_present(builder: SparkSession.Builder) -> bool:
@@ -153,21 +159,32 @@ def local_rows_df(spark: SparkSession, rows, schema):
     package routes through here.
 
     Semantics are identical for the simple types these tables use
-    (longs/ints/doubles/strings/arrays of longs) — verified
-    row-and-schema-exact against the pickle path; Arrow-unsupported
-    types fall back to the plain path automatically
-    (``spark.sql.execution.arrow.pyspark.fallback.enabled``).  An
-    empty ``rows`` keeps the plain path (already a no-task empty
-    relation)."""
+    (longs/ints/doubles/strings, possibly NULL, and arrays of longs or
+    strings) — verified row-and-schema-exact against the pickle path.
+    Where pandas/Arrow cannot take the rows, the plain path is used and
+    a once-per-process warning says so.  An empty ``rows`` plans a
+    zero-partition relation: no tasks at all (an empty pandas frame
+    would not take the Arrow path, and an empty list still plans one
+    pickle-path Python task per default partition)."""
+    global _fallback_warned
     rows = list(rows)
     if not rows:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
     try:
         import pandas as pd
 
         pdf = pd.DataFrame.from_records(rows)
         return spark.createDataFrame(pdf, schema=schema)
-    except Exception:  # pandas/Arrow unavailable or shape mismatch
+    except Exception as exc:  # pandas/Arrow unavailable or shape mismatch
+        if not _fallback_warned:
+            _fallback_warned = True
+            warnings.warn(
+                "local_rows_df: Arrow batch unavailable "
+                f"({type(exc).__name__}: {exc}); using the pickle path, "
+                "whose Python tasks re-run in every consumer job",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         return spark.createDataFrame(rows, schema)
 
 

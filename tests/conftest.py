@@ -157,6 +157,9 @@ SLOW_TESTS = {
     "test_bpe_train_batched_phantom_prefix_adversary",
     "test_ann_index_cli",
     "test_ingest_correlate_command",
+    # nightly-path guards: each runs ingest + release on the fixtures
+    "test_ingest_and_release_build_no_pickle_path_tables",
+    "test_release_unpersists_artifacts_when_it_raises",
 }
 
 

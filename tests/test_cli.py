@@ -100,6 +100,21 @@ def _ns(**kw):
     return argparse.Namespace(**kw)
 
 
+def _ingest_fixture_uploads(spark, tmp_path, wh):
+    for paths, ft in [
+        (_write_clinical_pair(tmp_path), None),
+        (_write_maf(tmp_path), None),
+        (_write_bed(tmp_path), "bed"),
+        (_write_cna(tmp_path), None),
+        (_write_assay(tmp_path), None),
+    ]:
+        rc = cmd_ingest(
+            spark,
+            _ns(paths=paths, center=CENTER, warehouse=wh, filetype=ft, force=True),
+        )
+        assert rc == 0, f"ingest failed for {paths}"
+
+
 def test_validate_command(spark, tmp_path):
     paths = _write_clinical_pair(tmp_path)
     rc = cmd_validate(
@@ -123,18 +138,7 @@ def test_ingest_release_dashboard(spark, tmp_path):
     out = str(tmp_path / "release")
     dash = str(tmp_path / "dash")
 
-    for paths, ft in [
-        (_write_clinical_pair(tmp_path), None),
-        (_write_maf(tmp_path), None),
-        (_write_bed(tmp_path), "bed"),
-        (_write_cna(tmp_path), None),
-        (_write_assay(tmp_path), None),
-    ]:
-        rc = cmd_ingest(
-            spark,
-            _ns(paths=paths, center=CENTER, warehouse=wh, filetype=ft, force=True),
-        )
-        assert rc == 0, f"ingest failed for {paths}"
+    _ingest_fixture_uploads(spark, tmp_path, wh)
 
     # bed bronze needs SEQ_ASSAY_ID for the release no-genepanel filter
     bed = spark.read.parquet(os.path.join(wh, "bed"))
@@ -1823,6 +1827,111 @@ def test_interrupted_status_swap_rolls_forward(spark, tmp_path, monkeypatch):
     assert prior_status(spark, wh, CENTER, "b.txt", "m2") == "INVALID"
     assert not os.path.exists(manifest)
     assert prior_status(spark, wh, CENTER, "a.txt", "m1") == "VALIDATED"
+
+
+def test_valid_upload_into_fresh_warehouse_leaves_no_error_tracker(
+    spark, tmp_path
+):
+    """A valid upload with no stored error row changes nothing in the
+    error tracker, so none is written; the invalid-reasons report
+    still says "No errors!" for the center."""
+    from genie_spark.io.status import record_status, write_invalid_reasons
+
+    wh = str(tmp_path / "warehouse")
+    record_status(spark, wh, CENTER, "a.txt", "m1", "VALIDATED", path="a.txt")
+    assert os.path.isdir(os.path.join(wh, "validation_status"))
+    assert not os.path.exists(os.path.join(wh, "error_tracker"))
+    (path,) = write_invalid_reasons(spark, wh, str(tmp_path / "out"), [CENTER])
+    with open(path) as f:
+        assert f.read() == "No errors!"
+
+
+def test_error_tracker_rewritten_only_when_it_changes(spark, tmp_path):
+    """The tracker keeps its files when a valid upload has no error row
+    to clear; a file that turns valid still clears its own row."""
+    from genie_spark.io.status import ERROR_TABLE, record_status
+
+    wh = str(tmp_path / "warehouse")
+    tracker = os.path.join(wh, ERROR_TABLE)
+
+    def parts():
+        return sorted(f for f in os.listdir(tracker) if f.startswith("part-"))
+
+    record_status(
+        spark, wh, CENTER, "bad.txt", "m1", "INVALID", path="bad.txt",
+        errors="broken",
+    )
+    before = parts()
+    record_status(spark, wh, CENTER, "ok.txt", "m2", "VALIDATED", path="ok.txt")
+    assert parts() == before
+    rows = spark.read.parquet(tracker).collect()
+    assert [(r["name"], r["errors"]) for r in rows] == [("bad.txt", "broken")]
+
+    record_status(
+        spark, wh, CENTER, "bad.txt", "m3", "VALIDATED", path="bad.txt"
+    )
+    assert spark.read.parquet(tracker).count() == 0
+
+
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_ingest_and_release_build_no_pickle_path_tables(
+    spark, tmp_path, monkeypatch
+):
+    """Every driver-built table on the ingest and release path enters
+    as an Arrow batch (session.local_rows_df): createDataFrame on a
+    Python list plans Python tasks that re-run in every consumer job.
+    The release leaves no persisted artifact behind."""
+    from pyspark.sql import SparkSession
+
+    plain = SparkSession.createDataFrame
+
+    def no_lists(self, data, *args, **kwargs):
+        if isinstance(data, list):
+            raise AssertionError("createDataFrame called with a Python list")
+        return plain(self, data, *args, **kwargs)
+
+    wh = str(tmp_path / "warehouse")
+    before = _persistent_rdd_ids(spark)
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_lists)
+    _ingest_fixture_uploads(spark, tmp_path, wh)
+    rc = cmd_release(
+        spark,
+        _ns(warehouse=wh, output=str(tmp_path / "release"), version="T",
+            pad=10, whitelist=None),
+    )
+    assert rc == 0
+    monkeypatch.undo()
+    assert _persistent_rdd_ids(spark) <= before
+
+
+def test_release_unpersists_artifacts_when_it_raises(
+    spark, tmp_path, monkeypatch
+):
+    """A release that fails after its artifacts were cached still
+    releases them."""
+    from genie_spark import cli
+
+    wh = str(tmp_path / "warehouse")
+    _ingest_fixture_uploads(spark, tmp_path, wh)
+    before = _persistent_rdd_ids(spark)
+    seen = []
+
+    def fail(*args, **kwargs):
+        seen.append(_persistent_rdd_ids(spark) - before)
+        raise RuntimeError("snapshot failed")
+
+    monkeypatch.setattr(cli, "_append_release_snapshot", fail)
+    with pytest.raises(RuntimeError, match="snapshot failed"):
+        cmd_release(
+            spark,
+            _ns(warehouse=wh, output=str(tmp_path / "release"), version="T",
+                pad=10, whitelist=None),
+        )
+    assert seen and seen[0], "the artifacts were not cached before the failure"
+    assert _persistent_rdd_ids(spark) <= before
 
 
 def test_dashboard_reads_uncommitted_release_logs_as_absent(spark, tmp_path):

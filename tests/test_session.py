@@ -8,6 +8,9 @@ logic without starting a second SparkSession (getOrCreate would just
 reuse the test session anyway).
 """
 
+import warnings
+
+import pytest
 from pyspark.sql import SparkSession
 
 from genie_spark import session as S
@@ -77,18 +80,53 @@ def test_local_rows_df_plans_local_relation_and_matches_pickle_path(spark):
         ([(1, "ab"), (2, None)], "k long, s string"),
         ([(0.5,), (0.25,)], ["q"]),
         ([(1, 2, 3, 4, 5)], "query_id long, cell long, s int, cid long, d2 long"),
+        # ValidationReport.to_df: array<string> examples, empty lists too
+        (
+            [("maf", "r1", "error", 3, ["a", "b"], "m"),
+             ("maf", "r2", "warning", 0, [], None)],
+            "file_type string, rule_id string, severity string, "
+            "n_violations long, examples array<string>, message string",
+        ),
+        # all-string tables (assay YAML, oncotree, status rows) with NULLs,
+        # including an all-NULL column
+        ([("a", None, None), (None, "b", None)], "x string, y string, z string"),
     ]
     for rows, schema in cases:
         plain = spark.createDataFrame(rows, schema)
         arrow = local_rows_df(spark, rows, schema)
         assert arrow.schema == plain.schema
-        assert sorted(map(tuple, arrow.collect())) == sorted(
-            map(tuple, plain.collect())
+        assert sorted(map(tuple, arrow.collect()), key=repr) == sorted(
+            map(tuple, plain.collect()), key=repr
         )
         assert (
             arrow._jdf.queryExecution().optimizedPlan().nodeName()
             == "LocalRelation"
         )
-    # empty input keeps the plain path (already a no-task relation)
+    # empty input plans a zero-partition relation: no task runs for it
+    # in any consumer job (an empty list plans one pickle-path Python
+    # task per default partition)
     empty = local_rows_df(spark, [], "a long, b string")
+    assert empty.rdd.getNumPartitions() == 0
     assert empty.count() == 0 and len(empty.schema) == 2
+
+
+def test_local_rows_df_fallback_warns_once(spark, monkeypatch):
+    """When pandas/Arrow cannot take the rows, local_rows_df still
+    returns them (via the pickle path) and warns once per process."""
+    import pandas as pd
+
+    from genie_spark import session
+
+    def no_records(*args, **kwargs):
+        raise ValueError("no pandas here")
+
+    monkeypatch.setattr(pd.DataFrame, "from_records", no_records)
+    monkeypatch.setattr(session, "_fallback_warned", False)
+    with pytest.warns(RuntimeWarning, match="pickle path"):
+        df = session.local_rows_df(spark, [(1, "a")], "k long, s string")
+    assert [tuple(r) for r in df.collect()] == [(1, "a")]
+    assert df._jdf.queryExecution().optimizedPlan().nodeName() != "LocalRelation"
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        again = session.local_rows_df(spark, [(2, "b")], "k long, s string")
+    assert [tuple(r) for r in again.collect()] == [(2, "b")]
